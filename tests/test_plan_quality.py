@@ -524,15 +524,14 @@ def test_minhash_candidate_shuffle_sizes_with_data(spark, sf_dir):
     # candidate volume is ~1e-7 of brute force, measured at 1024x)
 
 
-def test_minhash_sizing_count_is_metadata_job(spark, sf_dir):
+def test_minhash_sizing_count_is_metadata_job(spark, sf_dir, monkeypatch):
     """r11 opt pinned (r12 directive #6): the derived-partitions
     sizing ``count()`` runs on the RAW parquet scan BEFORE ``_spread``
-    — a metadata-answerable single job — instead of executing the
+    — a metadata-answerable count — instead of executing the
     round-robin exchange (+ sort-before-repartition) just to learn a
-    row count. With the count pre-spread the whole pairs count is 7
-    jobs at this shape; the post-spread formulation added one more
-    (the AQE exchange materialization for the count). Pin the job
-    budget so a regression re-adding the exchange trips loudly."""
+    row count. The pin is the counted plan itself: no
+    RoundRobinPartitioning exchange. The job budget of the whole
+    pairs count stays as a secondary check."""
     from tidb_lightning_release_4_0_spark.operators import dedup as D
 
     sc = spark.sparkContext
@@ -540,13 +539,57 @@ def test_minhash_sizing_count_is_metadata_job(spark, sf_dir):
         "doc_id", "text"
     )
     docs.count()  # warm the scan metadata
+    counted = []
+    frame_cls = type(docs)
+    real_count = frame_cls.count
+
+    def spy(self):
+        counted.append(self._jdf.queryExecution().executedPlan().toString())
+        return real_count(self)
+
+    monkeypatch.setattr(frame_cls, "count", spy)
+    pairs = D.minhash_lsh_pairs(docs, threshold=0.2)
+    monkeypatch.undo()
+    assert len(counted) == 1, counted
+    assert "RoundRobinPartitioning" not in counted[0], counted[0]
+
     sc.setJobGroup("mh_jobcount", "minhash pairs sizing job budget")
     try:
-        D.minhash_lsh_pairs(docs, threshold=0.2).count()
+        pairs.count()
     finally:
         sc.setJobGroup(None, None)
     ids = sc.statusTracker().getJobIdsForGroup("mh_jobcount")
     assert len(ids) <= 7, f"minhash pairs count ran {len(ids)} jobs"
+
+
+def test_python_readers_are_one_arrow_stage_over_range(spark, tmp_path):
+    """read_sql_dump and read_csv_strict plan one Python node
+    (MapInArrow) straight over a JVM Range: no pickled RDD of the
+    task list (Scan ExistingRDD), so no second Python worker per task."""
+    from tidb_lightning_release_4_0_spark.config import CSVConfig
+    from tidb_lightning_release_4_0_spark.sources.csv_strict import (
+        read_csv_strict,
+    )
+    from tidb_lightning_release_4_0_spark.sources.sql_dump_source import (
+        read_sql_dump,
+    )
+
+    sql = tmp_path / "db.t.sql"
+    sql.write_text("INSERT INTO t VALUES (1,'a'),(2,'b');\n")
+    csv = tmp_path / "db.t.csv"
+    csv.write_text("1,a\n2,b\n")
+    sql_files = [(str(sql), sql.stat().st_size)]
+    frames = [
+        read_sql_dump(spark, sql_files, num_columns=2, columnar=True),
+        read_sql_dump(spark, sql_files, num_columns=2),
+        read_csv_strict(spark, [(str(csv), csv.stat().st_size)], CSVConfig(), 2)[0],
+    ]
+    python_nodes = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert [plan.count(n) for n in python_nodes] == [1, 0, 0, 0], plan
+        assert "ExistingRDD" not in plan, plan
+        assert "Range (" in plan, plan
 
 
 def test_cc_label_frame_is_one_arrow_batch(spark):

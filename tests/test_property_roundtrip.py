@@ -57,6 +57,81 @@ def test_sql_dump_roundtrip(rows):
     assert parsed == expect
 
 
+_dump_chars = list("ab ,;()'\"`\\\n\t%_中🙂")
+
+
+@st.composite
+def _dump_literal(draw, backslash: bool) -> str:
+    kind = draw(st.sampled_from(["str", "null", "int", "dec", "exp", "hex", "bin", "bool"]))
+    if kind == "str":
+        quote_style = draw(st.booleans())  # \' or ''
+        out = []
+        for ch in draw(st.text(alphabet=st.sampled_from(_dump_chars), max_size=12)):
+            if ch == "'":
+                out.append("\\'" if backslash and quote_style else "''")
+            elif ch == "\\" and backslash:
+                out.append("\\\\")
+            elif ch == "\n" and backslash:
+                out.append("\\n")
+            else:
+                out.append(ch)
+        return "'" + "".join(out) + "'"
+    if kind == "null":
+        return draw(st.sampled_from(["NULL", "null"]))
+    if kind == "int":
+        return str(draw(st.integers(-(2**63), 2**64)))
+    if kind == "dec":
+        v = draw(st.integers(-(10**9), 10**9))
+        return draw(st.sampled_from([f"{v}.{abs(v) % 97}", f"{v}.", f".{abs(v)}"]))
+    if kind == "exp":
+        m = draw(st.integers(-999, 999))
+        return draw(st.sampled_from([f"{m}e{m % 40}", f"{m}.5E-{m % 9}", f"-1.5e+{m % 7}"]))
+    if kind == "hex":
+        h = draw(st.text(alphabet="0123456789abcdefABCDEF", min_size=1, max_size=8))
+        return draw(st.sampled_from([f"0x{h}", f"x'{h}'", "X''"]))
+    if kind == "bin":
+        b = draw(st.text(alphabet="01", min_size=1, max_size=8))
+        return draw(st.sampled_from([f"0b{b}", f"b'{b}'", "B''"]))
+    return draw(st.sampled_from(["TRUE", "false"]))
+
+
+@st.composite
+def _dump(draw, backslash: bool) -> str:
+    out = ["/*!40101 SET NAMES binary*/;\n"] if draw(st.booleans()) else []
+    for _ in range(draw(st.integers(1, 3))):
+        head = draw(st.sampled_from(["INSERT INTO", "REPLACE INTO", "INSERT IGNORE INTO"]))
+        cols = draw(st.sampled_from(["", " (`a`,b)", " (`c``d`, e, f)"]))
+        sep = draw(st.sampled_from([",", ",\n", " , "]))
+        tuples = draw(
+            st.lists(
+                st.lists(_dump_literal(backslash), min_size=1, max_size=6),
+                min_size=1,
+                max_size=5,
+            )
+        )
+        body = sep.join("(" + ",".join(t) + ")" for t in tuples)
+        out.append(f"{head} `t`{cols} VALUES\n{body};\n")
+    return "".join(out)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.booleans().flatmap(lambda bs: st.tuples(st.just(bs), _dump(bs))))
+def test_structural_lexer_matches_tokenizer(case):
+    """Generated mydumper-shaped dumps: ``''``, ``\\'``, ``\\\\``, quotes,
+    backquotes, ``;`` and ``(`` inside strings, NULL, signed and
+    exponent numbers, hex/bin, column lists, short and long tuples.
+    The structural lexer must accept every one and equal the
+    tokenizer in both backslash modes."""
+    from tidb_lightning_release_4_0_spark.sources.sql_dump_source import (
+        _lex,
+        _parse_insert_statements_slow,
+    )
+
+    backslash, text = case
+    got = _lex(text.encode("utf-8"), backslash).statements()
+    assert got == list(_parse_insert_statements_slow(text, backslash))
+
+
 def _csv_field(v: str | None) -> str:
     if v is None:
         return "\\N"

@@ -254,10 +254,7 @@ def minhash_lsh_pairs(
     # un-spread scan answers from parquet metadata (r11 opt, §2.4).
     n_docs = 0
     if candidate_partitions is None and auto_partitions:
-        try:
-            n_docs = df.count()
-        except Exception:
-            n_docs = 0
+        n_docs = df.count()
     # single-lineage plan — no persist to leak: the signature (one
     # fold over the shingle hashes) is evaluated exactly once because
     # the bucket-local pair generation below never self-joins the
@@ -850,10 +847,7 @@ def simhash_dup_pairs(
     # — an Exchange that computes nothing the query needs).
     n_docs = 0
     if candidate_partitions is None and auto_partitions:
-        try:
-            n_docs = df.count()
-        except Exception:
-            n_docs = 0
+        n_docs = df.count()
     df = _spread(df)
     sigs = df.select(
         F.col(id_col).alias("doc_id"),

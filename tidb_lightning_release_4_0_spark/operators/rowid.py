@@ -41,22 +41,19 @@ ROWID = "_row_id"
 _BMAP_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
-def metadata_df(spark, rows: list, schema, slices: int = 1) -> DataFrame:
-    """Driver-sized metadata frame with an EXPLICIT slice count:
-    plain createDataFrame splits even a 32-row list across
-    defaultParallelism partitions (a broadcast build then schedules
-    32 near-empty tasks as an extra job per restore), and a
-    .repartition to fix the layout is a shuffle AQE materializes as
-    its own job. slices=1 for broadcast tables; slices=len(rows) for
-    one-task-per-row read plans.
+def metadata_df(spark, rows: list, schema) -> DataFrame:
+    """Small metadata frame in ONE partition (a broadcast build
+    side): plain createDataFrame splits even a 32-row list across
+    defaultParallelism partitions (the broadcast then schedules 32
+    near-empty tasks as an extra job per restore), and a .repartition
+    to fix the layout is a shuffle AQE materializes as its own job.
 
-    The slices=1 (broadcast) path converts through pandas/Arrow
-    instead of parallelize(): the Arrow batch is built driver-side,
-    so materializing the broadcast costs ~half the wall of the
-    1-task RDD scan (measured 0.52 -> 0.24 s per build at 32 rows;
-    one build per table per restore). The explicit-slices path keeps
-    the RDD layout — its callers map one TASK per row."""
-    if slices == 1 and rows:
+    Converts through pandas/Arrow instead of parallelize(): the Arrow
+    batch is built locally, so materializing the broadcast costs
+    ~half the wall of the 1-task RDD scan (measured 0.52 -> 0.24 s per
+    build at 32 rows; one build per table per restore). Read plans
+    that map one task per entry use ``sources.map_tasks`` instead."""
+    if rows:
         try:
             import pandas as pd
 
@@ -66,9 +63,7 @@ def metadata_df(spark, rows: list, schema, slices: int = 1) -> DataFrame:
             )
         except Exception:
             pass  # arrow/pandas conversion edge: RDD path below
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, max(slices, 1)), schema
-    )
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
 # 2^33 rows per partition capacity: 8.5B rows/chunk never overflows

@@ -42,6 +42,7 @@ from ..sources.csv_source import read_csv
 from ..sources.mydump_loader import MDTableMeta, discover_cfg
 from ..sources.schema_reader import TableSchema, load_table_schema
 from ..sources.sql_dump_source import (
+    lexer_fallbacks,
     probe_insert_columns,
     project_fields,
     read_sql_dump,
@@ -102,6 +103,8 @@ class TableResult:
     failed_step: int | None = None  # Status the failed step targeted
     seconds: float = 0.0
     source_bytes: int = 0
+    #: .sql chunks the structural lexer declined to the tokenizer
+    lexer_fallbacks: int = 0
 
 
 @dataclass
@@ -136,6 +139,11 @@ class RunSummary:
                 lines.append(
                     f"[+] [table: {name}] rows={r.rows} "
                     f"alloc_base={r.alloc_base} speed={mibs:.1f} MiB/s"
+                    + (
+                        f" lexer_fallbacks={r.lexer_fallbacks}"
+                        if r.lexer_fallbacks
+                        else ""
+                    )
                 )
         return "\n".join(lines)
 
@@ -1490,6 +1498,13 @@ class RestoreController:
                 return TableResult(table=name, status="skipped")
             cols = [c.name for c in schema.columns]
             keys = schema.primary_key
+            # one accumulator per SparkContext: the delta is this table's
+            # count when tables restore one at a time (table_concurrency=1)
+            has_sql = any(
+                f.path.lower().endswith(".sql") for f in meta.data_files
+            )
+            fallbacks = lexer_fallbacks(self.spark) if has_sql else None
+            fallbacks0 = fallbacks.value if fallbacks else 0
             if isinstance(self.sink, ParquetSink):
                 if keys:
                     self.sink.key_columns[name] = keys
@@ -1783,6 +1798,9 @@ class RestoreController:
                 self.cp.set_table_status(name, Status.ANALYZE_SKIPPED)
             if self.progress:
                 self.progress.table_end(name)
+            declined = fallbacks.value - fallbacks0 if fallbacks else 0
+            if has_sql:
+                log.info("[table: %s] sql lexer fallbacks: %d", name, declined)
             return TableResult(
                 table=name,
                 status="restored",
@@ -1791,6 +1809,7 @@ class RestoreController:
                 alloc_base=base,
                 seconds=time.monotonic() - t0,
                 source_bytes=meta.total_size,
+                lexer_fallbacks=declined,
             )
         except Exception as e:  # O12: collect, don't abort the run
             log.exception("restore failed for %s", name)

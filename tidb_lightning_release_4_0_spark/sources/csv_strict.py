@@ -15,18 +15,17 @@ faithful port of the reference's LOAD DATA semantics
 - the null sentinel matches the RAW (pre-unescape) unquoted field
 - trim-last-separator support
 
-Executed like the .sql reader: one task per file via mapInPandas over
-a plan-time file list (byte-faithful: bytes decode latin-1 so blobs
-survive). This is the slow path by design — engaged via
-``CSVConfig.strict_parser`` when a dump needs exact escape fidelity;
-the Spark-native reader remains the 100 TB default.
+Executed like the .sql reader: one task per file, ``mapInArrow`` over
+a range-indexed plan (``sources.map_tasks``; byte-faithful: bytes
+decode latin-1 so blobs survive). This is the slow path by design —
+engaged via ``CSVConfig.strict_parser`` when a dump needs exact
+escape fidelity; the Spark-native reader remains the 100 TB default.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -144,6 +143,7 @@ def read_csv_strict(
     Row-id bases are reserved per file like the .sql reader.
     """
     from ..operators.rowid import file_row_bases
+    from . import map_tasks
 
     bases = file_row_bases(files, num_columns, is_sql=False)
 
@@ -154,40 +154,27 @@ def read_csv_strict(
         first = next(parse_csv_text(head_text, cfg), None)
         header_cols = [c if c is not None else "" for c in (first or [])]
 
-    # one partition per file directly — see metadata_df for why a
-    # .repartition here would cost an extra shuffle job per read
-    from ..operators.rowid import metadata_df
-
-    plan = metadata_df(
-        spark,
-        [(p, bases[p]) for p, _ in files],
-        T.StructType(
-            [
-                T.StructField("path", T.StringType(), False),
-                T.StructField("base", T.LongType(), False),
-            ]
-        ),
-        slices=len(files),
-    )
-
     has_header = cfg.header
     cfg_copy = CSVConfig(**cfg.__dict__)
 
-    def parse_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, rid_base in zip(pdf["path"], pdf["base"]):
-                text = open(path, "rb").read().decode("latin-1")
-                rows = parse_csv_text(text, cfg_copy)
-                if has_header:
-                    next(rows, None)
-                out_rid, out_fields = [], []
-                rid = int(rid_base)
-                for r in rows:
-                    rid += 1
-                    out_rid.append(rid)
-                    out_fields.append(r)
-                yield pd.DataFrame(
-                    {"_row_id": out_rid, "_fields": out_fields}
-                )
+    def parse_file(task):
+        import pyarrow as pa
 
-    return plan.mapInPandas(parse_files, schema=OUTPUT_SCHEMA), header_cols
+        path, rid_base = task
+        with open(path, "rb") as fh:
+            text = fh.read().decode("latin-1")
+        rows = parse_csv_text(text, cfg_copy)
+        if has_header:
+            next(rows, None)
+        fields = list(rows)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(range(rid_base + 1, rid_base + 1 + len(fields)), pa.int64()),
+                pa.array(fields, pa.list_(pa.string())),
+            ],
+            names=["_row_id", "_fields"],
+        )
+
+    # one task per file, on the same range-indexed plan as read_sql_dump
+    tasks = [(p, bases[p]) for p, _ in files]
+    return map_tasks(spark, tasks, parse_file, OUTPUT_SCHEMA), header_cols
